@@ -2013,6 +2013,7 @@ object Dedup {
     * signatures into one 20-bit band value) is dropped from candidate
     * generation — its members still pair through their other bands, and
     * byte-identical docs belong to `dedup_exact` upstream, not here.
+    * Row order is UNSPECIFIED, as for [[simhashPairs]].
     */
   def simhashPairsOf(docsDf: DataFrame, maxHamming: Int = 2,
       numBands: Int = 3, bandBits: Int = 20,

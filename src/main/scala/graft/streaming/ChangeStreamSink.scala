@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.PlanAudit
-import graft.cdc.{BucketedSnapshot, ChangeLoader, Cursor, CursorStore}
+import graft.cdc.{BucketedSnapshot, ChangeLoader, Cursor, CursorLog, CursorStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -123,14 +123,22 @@ final class ChangeStreamSink(
   }
   private[graft] def snapTable(batchId: Long) = s"${tablePrefix}_v$batchId"
 
-  /** Plan audit of the last flush's apply join (spec hook: proves the
-    * snapshot side contributed no shuffle).
+  /** The last materializing flush's apply frame, kept unplanned so a
+    * flush never pays for [[lastApplyAudit]].
     */
-  @volatile private[graft] var lastApplyAudit: Option[PlanAudit.Audit] = None
+  @volatile private var lastApply: Option[DataFrame] = None
+
+  /** Plan audit of the last flush's apply join, taken on request (spec
+    * hook: proves the snapshot side contributed no shuffle).
+    */
+  private[graft] def lastApplyAudit: Option[PlanAudit.Audit] =
+    lastApply.map(next => PlanAudit.audit(next.queryExecution.executedPlan))
 
   private def deltaTable(batchId: Long) = s"${tablePrefix}_d$batchId"
 
   private[graft] def mvTable(batchId: Long) = s"${tablePrefix}_m$batchId"
+
+  private def store(spark: SparkSession) = new CursorStore(s"$baseDir/cursor", spark)
 
   private def isDelta(spark: SparkSession, batchId: Long): Boolean =
     spark.catalog.tableExists(deltaTable(batchId))
@@ -154,8 +162,8 @@ final class ChangeStreamSink(
     * applies deep.
     */
   def latestSnapshot(spark: SparkSession): Option[DataFrame] = {
-    val store = new CursorStore(s"$baseDir/cursor", spark)
-    store.readWithBatch(moduleHash).map { case (_, bid) => snapshotAt(spark, store, bid) }
+    val log = store(spark).view()
+    log.latest(moduleHash).map { case (_, bid) => snapshotAt(spark, log, bid) }
   }
 
   /** The newest committed materialized-rollup state (only when the sink was
@@ -163,8 +171,7 @@ final class ChangeStreamSink(
     * reader-facing shape.
     */
   def latestMv(spark: SparkSession): Option[DataFrame] = mv.flatMap { _ =>
-    val store = new CursorStore(s"$baseDir/cursor", spark)
-    store.readWithBatch(moduleHash).collect {
+    store(spark).readWithBatch(moduleHash).collect {
       case (_, bid) if spark.catalog.tableExists(mvTable(bid)) =>
         spark.table(mvTable(bid))
     }
@@ -174,10 +181,10 @@ final class ChangeStreamSink(
     * for a delta version — the newest base with every pending delta folded
     * in oldest-first.
     */
-  private def snapshotAt(spark: SparkSession, store: CursorStore, bid: Long): DataFrame =
+  private def snapshotAt(spark: SparkSession, log: CursorLog, bid: Long): DataFrame =
     if (!isDelta(spark, bid)) spark.table(snapTable(bid))
     else {
-      val bids = store.allBatches(moduleHash).filter(_ <= bid).sorted.reverse
+      val bids = log.batches(moduleHash).filter(_ <= bid).reverse
       val (deltas, rest) = bids.span(isDelta(spark, _))
       val base = rest.headOption.map(b => spark.table(snapTable(b))).getOrElse {
         val schema = spark.table(deltaTable(deltas.last))
@@ -237,13 +244,14 @@ final class ChangeStreamSink(
 
   private def flushOne(batch: DataFrame, bid: Long): Unit = {
     val spark = batch.sparkSession
-    val store = new CursorStore(s"$baseDir/cursor", spark)
-    if (store.committed(moduleHash, bid)) return // replay: durable already
-    if (batch.isEmpty) return
+    val log = store(spark).view()
+    if (log.committed(moduleHash, bid)) return // replay: durable already
     val t0 = System.currentTimeMillis()
+    val head = batch
+      .agg(max("block"), count(lit(1)), countDistinct(col("pk")), min("block")).collect()(0)
+    if (head.getLong(1) == 0L) return
     val collapsed = ChangeLoader.collapse(batch, fieldCols)
-    val pendingBids = store.allBatches(moduleHash).sorted.reverse
-      .takeWhile(isDelta(spark, _))
+    val pendingBids = log.batches(moduleHash).reverse.takeWhile(isDelta(spark, _))
     val materialize = compaction match {
       case Some(cp) =>
         pendingBids.size >= cp.maxDeltas ||
@@ -252,15 +260,15 @@ final class ChangeStreamSink(
       case None => compactEvery <= 1 || pendingBids.size >= compactEvery - 1
     }
     val tFlush = System.currentTimeMillis()
-    lazy val prior = store.readWithBatch(moduleHash) match {
-      case Some((_, b)) => snapshotAt(spark, store, b)
+    lazy val prior = log.latest(moduleHash) match {
+      case Some((_, b)) => snapshotAt(spark, log, b)
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           collapsed.drop("last_block", "deleted", "revived").schema)
     }
     if (materialize) {
       val next = ChangeLoader.applyBatch(prior, collapsed, fieldCols)
-      lastApplyAudit = Some(PlanAudit.audit(next.queryExecution.executedPlan))
+      lastApply = Some(next)
       BucketedSnapshot.write(next, snapTable(bid), buckets)
     } else {
       // merge-on-read delta flush: write ONLY the collapsed batch —
@@ -272,7 +280,7 @@ final class ChangeStreamSink(
     // batchId — written BEFORE the cursor commit, same durability order as
     // the snapshot itself (a crash in between replays into the overwrite)
     mv.foreach { d =>
-      val priorAgg = store.readWithBatch(moduleHash) match {
+      val priorAgg = log.latest(moduleHash) match {
         case Some((_, b)) if spark.catalog.tableExists(mvTable(b)) =>
           spark.table(mvTable(b))
         case _ => graft.cdc.MaterializedAgg.empty(collapsed, d)
@@ -283,11 +291,9 @@ final class ChangeStreamSink(
       graft.cdc.MaterializedAgg.merge(priorAgg, priorTouched, newTouched, d)
         .write.mode("overwrite").saveAsTable(mvTable(bid))
     }
-    val head = batch
-      .agg(max("block"), count(lit(1)), countDistinct(col("pk")), min("block")).collect()(0)
     val maxBlock = if (head.isNullAt(0)) -1L else head.getLong(0)
     val minBlock = if (head.isNullAt(3)) -1L else head.getLong(3)
-    store.commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,
+    store(spark).commit(Cursor(moduleHash, s"cursor:$maxBlock", maxBlock,
       s"block:$maxBlock"), bid)
     new SinkStats(s"$baseDir/stats", spark).record(FlushStat(
       moduleHash, bid, maxBlock, minBlock, head.getLong(1), head.getLong(2),
@@ -312,17 +318,17 @@ final class ChangeStreamSink(
     * fails fast instead.
     */
   def rollbackTo(spark: SparkSession, toBatchId: Long, newBatchId: Long): Unit = {
-    val store = new CursorStore(s"$baseDir/cursor", spark)
-    val rolled = store.cursorAt(moduleHash, toBatchId).getOrElse(
+    val log = store(spark).view()
+    val rolled = log.at(moduleHash, toBatchId).getOrElse(
       throw new IllegalArgumentException(s"no committed cursor for batch $toBatchId"))
-    val maxCommitted = store.maxBatchId(moduleHash)
+    val maxCommitted = log.maxBatchId(moduleHash)
     require(newBatchId > maxCommitted,
       s"newBatchId $newBatchId must exceed every committed batchId (max $maxCommitted); " +
         "a collision would silently swallow a future micro-batch's commit")
     // re-commit the old snapshot under the new batch id so the cursor log
     // stays append-only and resolves (by commit order) to the rolled-back
     // state (snapshotAt materializes even if toBatchId was a delta version)
-    BucketedSnapshot.write(snapshotAt(spark, store, toBatchId), snapTable(newBatchId), buckets)
+    BucketedSnapshot.write(snapshotAt(spark, log, toBatchId), snapTable(newBatchId), buckets)
     // the rollup rolls back with the snapshot: re-expose the old version's
     // agg state under the new batchId (every mv flush wrote one)
     mv.foreach { _ =>
@@ -330,7 +336,7 @@ final class ChangeStreamSink(
         spark.table(mvTable(toBatchId)).write.mode("overwrite")
           .saveAsTable(mvTable(newBatchId))
     }
-    store.commit(Cursor(moduleHash, s"cursor:rollback:${rolled.blockNum}",
+    store(spark).commit(Cursor(moduleHash, s"cursor:rollback:${rolled.blockNum}",
       rolled.blockNum, rolled.blockId), newBatchId)
   }
 

@@ -106,7 +106,7 @@ object CurateStream {
     *      kept docs + state + cursor are already durable is a true no-op —
     *      never re-append, never touch a version a reader may hold.
     *   1. prior state resolves through the cursor to the newest batch
-    *      committed STRICTLY BEFORE this one (`readBatchBefore`) — a crash
+    *      committed STRICTLY BEFORE this one (`CursorLog.before`) — a crash
     *      that left this batch's own half-written versions can never feed
     *      them back into its replay.
     *   2. kept docs and both state tables write to NEW per-batch versions
@@ -122,9 +122,10 @@ object CurateStream {
       benchGrams: DataFrame, minQuality: Double, cap: Int): Unit = {
     val s = batch.sparkSession
     val store = new CursorStore(s"$outDir/cursor", s)
-    if (store.committed(ModuleHash, batchId)) return // replay: durable already
+    val log = store.view()
+    if (log.committed(ModuleHash, batchId)) return // replay: durable already
     if (batch.isEmpty) return
-    val (md5Seen, simIndex) = store.readBatchBefore(ModuleHash, batchId) match {
+    val (md5Seen, simIndex) = log.before(ModuleHash, batchId) match {
       case Some((_, prev)) =>
         (s.read.schema(Md5Schema).parquet(md5Dir(outDir, prev)),
           s.read.schema(SimSchema).parquet(simDir(outDir, prev)))
@@ -138,13 +139,13 @@ object CurateStream {
     // blockNum carries the batch's max doc_id — the monotone progress
     // marker under ordered replay, like the reference's block number
     val maxDoc = batch.agg(max("doc_id")).collect()(0).getLong(0)
-    store.commit(Cursor(ModuleHash, s"cursor:$batchId", maxDoc,
-      s"docs:$maxDoc"), batchId)
+    val cursor = Cursor(ModuleHash, s"cursor:$batchId", maxDoc, s"docs:$maxDoc")
+    store.commit(cursor, batchId)
     // GC: state versions older than the immediate prior are unreachable
     // (prior resolution only ever looks one committed batch back); kept
-    // versions are output and always retained
-    val committed = store.allBatches(ModuleHash).sorted
-    committed.dropRight(2).foreach { old =>
+    // versions are output and always retained. The view predates the
+    // commit above, so it counts this batch explicitly.
+    log.withCommit(cursor, batchId).batches(ModuleHash).dropRight(2).foreach { old =>
       deleteDir(s, md5Dir(outDir, old))
       deleteDir(s, simDir(outDir, old))
     }
@@ -155,8 +156,7 @@ object CurateStream {
     * invisible here (the [[ChangeStreamSink.latestSnapshot]] discipline).
     */
   def keptAll(s: SparkSession, outDir: String): DataFrame = {
-    val bids = new CursorStore(s"$outDir/cursor", s)
-      .allBatches(ModuleHash).sorted
+    val bids = new CursorStore(s"$outDir/cursor", s).allBatches(ModuleHash)
     if (bids.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("doc_id", LongType),

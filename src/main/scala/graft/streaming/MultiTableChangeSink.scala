@@ -24,7 +24,7 @@ import java.security.MessageDigest
   *   - the MODULE cursor commits LAST — it is the transaction's commit
   *     point. A crash before it leaves per-table writes that a replay
   *     deterministically overwrites (prior state resolves via
-  *     [[CursorStore.readBatchBefore]], never the half-written batch), so
+  *     [[graft.cdc.CursorLog.before]], never the half-written batch), so
   *     the observable state (module cursor → table versions) moves
   *     atomically: exactly-once under micro-batch replay.
   */
@@ -51,12 +51,12 @@ final class MultiTableChangeSink(
     * the module cursor lands, preserving the one-transaction reader view.
     */
   def latestSnapshots(spark: SparkSession): Map[String, DataFrame] = {
-    val store = new CursorStore(s"$baseDir/cursor", spark)
-    store.readWithBatch(moduleHash) match {
+    val log = new CursorStore(s"$baseDir/cursor", spark).view()
+    log.latest(moduleHash) match {
       case None => Map.empty
       case Some((_, moduleBid)) =>
         schemas.keys.flatMap { t =>
-          store.readBatchBefore(tableCursorKey(t), moduleBid + 1).map { case (_, bid) =>
+          log.before(tableCursorKey(t), moduleBid + 1).map { case (_, bid) =>
             t -> spark.table(snapTable(t, bid))
           }
         }.toMap
@@ -66,21 +66,28 @@ final class MultiTableChangeSink(
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val store = new CursorStore(s"$baseDir/cursor", spark)
-    if (store.committed(moduleHash, batchId)) return // replay: durable already
-    if (batch.isEmpty) return
+    val log = store.view()
+    if (log.committed(moduleHash, batchId)) return // replay: durable already
     val t0 = System.currentTimeMillis()
-    // One scan feeds every table's route + the stats agg.
+    // One scan (the stats agg) fills the cache every table's route reads.
     val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      val head = cached
+        .agg(max("block"), count(lit(1)), countDistinct(col("table"), col("pk")),
+          min("block")).collect()(0)
+      if (head.getLong(1) == 0L) return
       schemas.foreach { case (t, sch) =>
         val typed = MultiTable.forTable(cached, t, sch)
-        if (!typed.isEmpty) {
+        // a null max block: no row routes to this table, leave it untouched
+        val mxRow = typed.agg(max("block")).collect()(0)
+        if (!mxRow.isNullAt(0)) {
+          val mx = mxRow.getLong(0)
           val fields = MultiTable.fieldCols(sch)
           val collapsed = ChangeLoader.collapse(typed, fields)
           // prior = the table's newest version from a batch STRICTLY before
           // this one (a replay after a partial flush must not read its own
           // half-written version)
-          val prior = store.readBatchBefore(tableCursorKey(t), batchId) match {
+          val prior = log.before(tableCursorKey(t), batchId) match {
             case Some((_, bid)) => spark.table(snapTable(t, bid))
             case None =>
               spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -88,13 +95,9 @@ final class MultiTableChangeSink(
           }
           val next = ChangeLoader.applyBatch(prior, collapsed, fields)
           BucketedSnapshot.write(next, snapTable(t, batchId), buckets)
-          val mx = typed.agg(max("block")).collect()(0).getLong(0)
           store.commit(Cursor(tableCursorKey(t), s"cursor:$mx", mx, s"block:$mx"), batchId)
         }
       }
-      val head = cached
-        .agg(max("block"), count(lit(1)), countDistinct(col("table"), col("pk")),
-          min("block")).collect()(0)
       val maxBlock = head.getLong(0)
       // the transaction commit point: everything above is invisible to
       // readers (latestSnapshots resolves through cursors) until this lands

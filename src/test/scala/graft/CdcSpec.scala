@@ -93,7 +93,12 @@ class CdcSpec extends SparkSpecBase {
 
   test("cursor admin: allCursors / delete / deleteAll / compact") {
     val dir = Files.createTempDirectory("cursor_admin").toString
-    val store = new CursorStore(dir, spark)
+    val store = new CursorStore(s"$dir/log", spark)
+    def assertEmpty(): Unit = {
+      assert(store.read("m1").isEmpty && store.readWithBatch("m1").isEmpty)
+      assert(store.allCursors().isEmpty && store.maxBatchId("m1") == -1L)
+    }
+    assertEmpty() // no log written yet
     store.commit(Cursor("m1", "c1", 10, "b10"), 0)
     store.commit(Cursor("m1", "c2", 20, "b20"), 1)
     store.commit(Cursor("m2", "c3", 5, "b5"), 0)
@@ -106,5 +111,31 @@ class CdcSpec extends SparkSpecBase {
     assert(store.read("m2").isEmpty && store.read("m1").isDefined)
     assert(store.deleteAll() == 1)
     assert(store.allCursors().isEmpty)
+    assertEmpty() // a log emptied by deleteAll
+
+    // the resolution rule: per module, the highest (batchId, blockNum) row
+    store.commit(Cursor("m1", "c1", 10, "b10"), 0)
+    store.commit(Cursor("m1", "c2", 20, "b20"), 1)
+    store.commit(Cursor("m1", "rb", 15, "b15"), 2) // rollback-style: lower block
+    store.commit(Cursor("m2", "c3", 5, "b5"), 7)
+    assert(store.read("m1").contains(Cursor("m1", "rb", 15, "b15")))
+    assert(store.readWithBatch("m1").contains(Cursor("m1", "rb", 15, "b15") -> 2L))
+    assert(store.allCursors() == Map(
+      "m1" -> Cursor("m1", "rb", 15, "b15"),
+      "m2" -> Cursor("m2", "c3", 5, "b5")))
+    // strictly before: never the given batch itself
+    assert(store.readBatchBefore("m1", 2).contains(Cursor("m1", "c2", 20, "b20") -> 1L))
+    assert(store.readBatchBefore("m1", 3).contains(Cursor("m1", "rb", 15, "b15") -> 2L))
+    assert(store.readBatchBefore("m1", 0).isEmpty && store.readBatchBefore("m2", 7).isEmpty)
+    assert(store.cursorAt("m1", 1).contains(Cursor("m1", "c2", 20, "b20")))
+    assert(store.cursorAt("m1", 7).isEmpty && store.cursorAt("m2", 7).isDefined)
+    assert(store.maxBatchId("m1") == 2L && store.maxBatchId("m2") == 7L)
+    assert(store.committed("m1", 1) && !store.committed("m2", 1))
+    // a view is one read: it misses later commits unless told of them
+    val log = store.view()
+    store.commit(Cursor("m1", "c4", 30, "b30"), 3)
+    assert(log.batches("m1") == Seq(0L, 1L, 2L) && log.maxBatchId("m1") == 2L)
+    assert(log.withCommit(Cursor("m1", "c4", 30, "b30"), 3).batches("m1") == Seq(0L, 1L, 2L, 3L))
+    assert(store.view().batches("m1") == Seq(0L, 1L, 2L, 3L))
   }
 }

@@ -1,6 +1,12 @@
 package graft
 
+import graft.cdc.Cursor
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 class GraftFacadeSpec extends SparkSpecBase {
 
@@ -99,6 +105,74 @@ class GraftFacadeSpec extends SparkSpecBase {
     }.flatten
     assert(roots.nonEmpty && roots.forall(_.contains("curate")),
       s"kept must read back the materialized parquet, scans: $roots")
+  }
+
+  /** Jobs `body` launches from `CursorStore.scala`, attributed like the
+    * benchmark's tracer: the SQL execution's call site when the job has
+    * one, else its last stage's name. A fence job run after `body` proves
+    * the listener bus delivered every earlier job start.
+    */
+  private def cursorJobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.cursorJobs"
+    val execSite = new ConcurrentHashMap[Long, String]
+    val counted = new AtomicInteger
+    val fence = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execSite.put(x.executionId, x.description); ()
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("fence") => fence.countDown()
+          case Some(_) =>
+            val site = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+              .flatMap(id => Option(execSite.get(id.toLong)))
+              .getOrElse(e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))
+            if (site.contains("CursorStore.scala")) counted.incrementAndGet()
+          case None =>
+        }
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, null)
+      sc.setLocalProperty(tag, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
+      assert(fence.await(30, TimeUnit.SECONDS), "listener bus never delivered the fence job")
+      counted.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("facade cursorStore: commit/read round trip") {
+    val dir = java.nio.file.Files.createTempDirectory("facade_cursor").toString
+    assert(g.cursorStore(dir).read("mod_fc").isEmpty)
+    g.cursorStore(dir).commit(Cursor("mod_fc", "c7", 7, "b7"), 0)
+    g.cursorStore(dir).commit(Cursor("mod_fc", "c7", 7, "b7"), 0) // replay: no-op
+    assert(g.cursorStore(dir).readWithBatch("mod_fc").contains(Cursor("mod_fc", "c7", 7, "b7") -> 0L))
+    assert(g.cursorStore(dir).view().batches("mod_fc") == Seq(0L))
+  }
+
+  test("live-cadence mv flush reads the cursor log once; reads take one job") {
+    val dir = java.nio.file.Files.createTempDirectory("facade_jobs").toString
+    val sink = g.streamSinkWithMv(dir, "mod_facade_jobs",
+      Seq("amount", "kval", "note"), groupCol = "note", valueCol = "amount")
+    val ch = g.changes()
+    val Array(b0, b1) = ch.select("block").distinct().orderBy("block").limit(2)
+      .collect().map(_.getLong(0))
+    sink.processBatch(ch.filter(col("block") === b0), 0) // prior state
+    // one block per flush, as at the live edge: the view, commit's own
+    // committed check and the append
+    val flush = cursorJobs(sink.processBatch(ch.filter(col("block") === b1), 1))
+    assert(flush >= 1 && flush <= 3, s"flush launched $flush cursor jobs")
+    val snap = cursorJobs(sink.latestSnapshot(spark).get)
+    assert(snap <= 1, s"latestSnapshot launched $snap cursor jobs")
+    val mv = cursorJobs(sink.latestMv(spark).get)
+    assert(mv <= 1, s"latestMv launched $mv cursor jobs")
+    assert(g.cursorStore(s"$dir/cursor").read("mod_facade_jobs").map(_.blockNum).contains(b1))
   }
 
   test("facade mv sink maintains a live rollup") {

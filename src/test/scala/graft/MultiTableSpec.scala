@@ -76,10 +76,11 @@ class MultiTableSpec extends SparkSpecBase {
       (Long, String, String, String, Map[String, String])]
     val (h1, h2) = rows.sortBy(_._1).splitAt(rows.size / 2)
     val sink = new MultiTableChangeSink(dir, "mod_mt_e2e", schemas)
+    // data first: AvailableNow fixes its end offset when the query starts
+    in.addData(h1); in.addData(h2)
     val q = sink.start(
       in.toDF().toDF("block", "table", "pk", "op", "fields"),
       s"$dir/ckpt", org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    in.addData(h1); in.addData(h2)
     q.awaitTermination(120000)
     val snaps = sink.latestSnapshots(spark)
     assert(snaps.keySet == Set("accounts", "categories"))
